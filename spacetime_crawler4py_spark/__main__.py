@@ -39,7 +39,6 @@ def main(config_file: str, restart: bool) -> None:
         delay_ms=cfg.delay_ms,
         robots_path=cfg.robots_path,
         order=cfg.order,
-        seen_filter=cfg.seen_filter,
         strict_lifo=(cfg.threads_count == 1 and cfg.order == "strict"),
     )
     n = eng.run()

@@ -28,7 +28,6 @@ class CrawlConfig:
     master: str = ""
     window_ms: int = 32_000
     order: str = "lifo"
-    seen_filter: str = "bloom"
     extra: dict = field(default_factory=dict)
 
     @property
@@ -64,5 +63,4 @@ def load_config(path: str) -> CrawlConfig:
         master=spark_sec.get("MASTER", ""),
         window_ms=int(spark_sec.get("WINDOWMS", "32000")),
         order=spark_sec.get("ORDER", "lifo"),
-        seen_filter=spark_sec.get("SEENFILTER", "bloom"),
     )

@@ -20,7 +20,7 @@ Plan-shape invariants (checked in tests via .explain):
   barriers — a filter written after mapInPandas would not be
   hoisted above it, so the composition order here is load-bearing);
 - the only Python crossings per iteration are parse_pages and the
-  optional bloom probe.
+  bloom probe (batched mode only) over the deduplicated links.
 
 Ordering contract: ``strict_lifo=True`` schedules one URL per batch
 (max seq first) — byte-for-byte the reference's single-threaded
@@ -57,6 +57,11 @@ from spacetime_crawler4py_spark.operators.parse import parse_pages
 
 
 class CrawlEngine:
+    # batches between bloom rebuilds: a rebuild re-sizes the filter to
+    # the grown seen set, and until then the ``recent`` anti-join in
+    # _new_links grows with every batch
+    BLOOM_REFRESH_BATCHES = 8
+
     def __init__(
         self,
         spark: SparkSession,
@@ -67,9 +72,6 @@ class CrawlEngine:
         strict_lifo: bool = False,
         window_ms: int = 32_000,
         delay_ms: int = 500,
-        use_bloom: bool = True,
-        seen_filter: str = "bloom",  # "bloom" | "cuckoo"
-        bloom_refresh_batches: int = 8,
         strict_reference_parity: bool = True,
         robots_path: str | None = None,
         revalidate_on_resume: bool = False,
@@ -93,9 +95,6 @@ class CrawlEngine:
         self.strict = strict_lifo
         self.window_ms = window_ms
         self.delay_ms = delay_ms
-        self.use_bloom = use_bloom and not strict_lifo
-        self.seen_filter_kind = seen_filter
-        self.bloom_refresh = bloom_refresh_batches
         self.parity = strict_reference_parity
         self.order = order
         # frontier-log maintenance cadence: every N committed batches,
@@ -339,129 +338,7 @@ class CrawlEngine:
             )
         )
 
-        # ---- link pipeline: F1-F4 validity on the RAW href, THEN
-        # P1 normalize → P2 hash.  Order is load-bearing reference
-        # parity (scraper.py:44 validates the raw extracted link;
-        # frontier.add_url normalizes afterwards): a trailing-slash
-        # variant of a blacklisted extension ('…/file.pdf/') is valid
-        # raw — the extension regex is '$'-anchored — and must be
-        # crawled, but would be dropped if normalized first.
-        links = (
-            parsed.select(
-                "fetch_order",
-                F.posexplode("links").alias("pos", "link"),
-            )
-            .where(F.col("link").isNotNull())
-            .where(col_is_valid(F.col("link"), self.parity))
-            .withColumn("url", col_normalize(F.col("link")))
-            .withColumn("url_hash", col_urlhash(F.col("url")))
-        )
-
-        # within-batch dedup: first occurrence wins (reference
-        # add-order).  min(struct(fetch_order, pos, url)) is the
-        # row_number()==1 window's exact twin — (fetch_order, pos) is
-        # unique per link row, so the lexicographic min IS the first
-        # occurrence and the carried url is that occurrence's — but
-        # partial-aggregatable: the hot key (a sitewide boilerplate
-        # link appearing on every page of the batch) collapses
-        # map-side instead of funneling through one window task.
-        candidates = (
-            links.groupBy("url_hash")
-            .agg(F.min(F.struct("fetch_order", "pos", "url")).alias("_f"))
-            .select(
-                "url_hash",
-                F.col("_f.fetch_order").alias("fetch_order"),
-                F.col("_f.pos").alias("pos"),
-                F.col("_f.url").alias("url"),
-            )
-        )
-
-        # ---- seen-set dedup (F8/J1): bloom fast path + exact anti-join.
-        # Invariant: the filter holds every hash of its COVERED
-        # committed-batch snapshot; hashes discovered after the last
-        # (re)build live in the partition-pruned ``recent`` slice of
-        # the log, which "definitely new" rows anti-join instead of
-        # the full seen set.  This replaces the former per-batch
-        # filter-delta Spark job (collect + driver merge every batch)
-        # with a small broadcast-ish join INSIDE the existing dedup
-        # job — the filter is only rebuilt on the refresh cadence,
-        # the classic bloom+delta-table layout.  The final seen set
-        # still equals the reference's exactly (anti-joins are the
-        # source of truth; the filter only prunes probes).
-        disc = self.store.discovered()
-        seen = disc.select("url_hash")
-        if self.use_bloom:
-            # both sharded layouts probe via (url_hash, host_bucket)
-            sharded = self.seen_filter_kind in ("bloom_sharded", "cuckoo")
-            if self._bloom is None or self._bloom_age >= self.bloom_refresh:
-                # periodic rebuild re-sizes the filter as the
-                # frontier grows (keeps fpp bounded); kind per
-                # north_rule "bloom/cuckoo" — cuckoo adds O(1)
-                # delete for URL expiry/recrawl semantics and is
-                # host_bucket-sharded so its sequential eviction
-                # chains build/insert shard-parallel in workers;
-                # bloom_sharded is the host_bucket-sharded bitmap
-                # (SCALE.md §3) used when one bitmap won't broadcast
-                if self.seen_filter_kind == "cuckoo":
-                    from spacetime_crawler4py_spark.frontier.cuckoo import (
-                        build_sharded_cuckoo,
-                    )
-
-                    self._bloom = build_sharded_cuckoo(
-                        self.store.discovered().select(
-                            "url_hash", "host_bucket"
-                        )
-                    )
-                elif sharded:
-                    from spacetime_crawler4py_spark.frontier.bloom import (
-                        build_sharded_bloom,
-                    )
-
-                    self._bloom = build_sharded_bloom(
-                        self.store.discovered().select("url_hash", "host_bucket")
-                    )
-                else:
-                    self._bloom = build_bloom(seen)
-                self._bloom_age = 0
-                # snapshot which committed batches the filter covers;
-                # later discoveries are handled by the pruned
-                # ``recent`` anti-join until the next rebuild
-                self._bloom_covered = self.store.committed_batches()
-            if sharded:
-                from spacetime_crawler4py_spark.frontier.bloom import (
-                    with_might_contain_sharded,
-                )
-                from spacetime_crawler4py_spark.frontier.store import (
-                    N_HOST_BUCKETS,
-                )
-
-                cand_b = candidates.withColumn(
-                    "host_bucket",
-                    F.pmod(F.xxhash64(col_netloc(F.col("url"))), F.lit(N_HOST_BUCKETS)).cast("int"),
-                )
-                probed = with_might_contain_sharded(cand_b, self._bloom, self.spark)
-                probed = probed.drop("host_bucket")
-            else:
-                probed = with_might_contain(candidates, self._bloom, self.spark)
-            fresh = probed.where(~F.col("might_be_seen")).drop("might_be_seen")
-            maybe = probed.where(F.col("might_be_seen")).drop("might_be_seen")
-            # "definitely new" per the filter can still collide with
-            # hashes discovered AFTER the filter's covered snapshot —
-            # anti-join only that partition-pruned slice of the log
-            committed_now = self.store.committed_batches()
-            if committed_now != self._bloom_covered:
-                from spacetime_crawler4py_spark.frontier.store import (
-                    FrontierStore,
-                )
-
-                recent = disc.where(
-                    ~FrontierStore.membership_filter(self._bloom_covered)
-                ).select("url_hash")
-                fresh = fresh.join(recent, "url_hash", "left_anti")
-            new = fresh.unionByName(maybe.join(seen, "url_hash", "left_anti"))
-            self._bloom_age += 1
-        else:
-            new = candidates.join(seen, "url_hash", "left_anti")
+        new = self._new_links(parsed)
 
         # ---- n_new + per-host lineage FIRST, from ONE host-level
         # aggregation — bounded by #hosts in the batch, NOT by #new
@@ -557,6 +434,87 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
 
+    def _new_links(self, parsed: DataFrame) -> DataFrame:
+        """The batch's links that are not yet in the seen set, one row
+        per url_hash: ``(url_hash, fetch_order, pos, url)`` of its
+        first occurrence.  ``parsed`` needs ``fetch_order`` and
+        ``links``."""
+        # ---- link pipeline: F1-F4 validity on the RAW href, THEN
+        # P1 normalize → P2 hash.  Order is load-bearing reference
+        # parity (scraper.py:44 validates the raw extracted link;
+        # frontier.add_url normalizes afterwards): a trailing-slash
+        # variant of a blacklisted extension ('…/file.pdf/') is valid
+        # raw — the extension regex is '$'-anchored — and must be
+        # crawled, but would be dropped if normalized first.
+        links = (
+            parsed.select(
+                "fetch_order",
+                F.posexplode("links").alias("pos", "link"),
+            )
+            .where(F.col("link").isNotNull())
+            .where(col_is_valid(F.col("link"), self.parity))
+            .withColumn("url", col_normalize(F.col("link")))
+            .withColumn("url_hash", col_urlhash(F.col("url")))
+        )
+
+        # within-batch dedup: first occurrence wins (reference
+        # add-order).  min(struct(fetch_order, pos, url)) is the
+        # row_number()==1 window's exact twin — (fetch_order, pos) is
+        # unique per link row, so the lexicographic min IS the first
+        # occurrence and the carried url is that occurrence's — but
+        # partial-aggregatable: the hot key (a sitewide boilerplate
+        # link appearing on every page of the batch) collapses
+        # map-side instead of funneling through one window task.
+        candidates = (
+            links.groupBy("url_hash")
+            .agg(F.min(F.struct("fetch_order", "pos", "url")).alias("_f"))
+            .select(
+                "url_hash",
+                F.col("_f.fetch_order").alias("fetch_order"),
+                F.col("_f.pos").alias("pos"),
+                F.col("_f.url").alias("url"),
+            )
+        )
+
+        # ---- seen-set dedup (F8/J1).  Strict mode (one URL per
+        # batch) is the exact anti-join alone.  Batched mode probes a
+        # broadcast bloom first.  Invariant: the filter holds every
+        # hash of its COVERED committed-batch snapshot; hashes
+        # discovered after the last (re)build live in the
+        # partition-pruned ``recent`` slice of the log, which
+        # "definitely new" rows anti-join instead of the full seen
+        # set.  The filter is only rebuilt every
+        # BLOOM_REFRESH_BATCHES, which re-sizes it to the grown seen
+        # set.  The final seen set still equals the reference's
+        # exactly (anti-joins are the source of truth; the filter
+        # only prunes probes).
+        disc = self.store.discovered()
+        seen = disc.select("url_hash")
+        if self.strict:
+            return candidates.join(seen, "url_hash", "left_anti")
+        if self._bloom is None or self._bloom_age >= self.BLOOM_REFRESH_BATCHES:
+            self._bloom = build_bloom(seen)
+            self._bloom_age = 0
+            # snapshot which committed batches the filter covers;
+            # later discoveries are handled by the pruned ``recent``
+            # anti-join until the next rebuild
+            self._bloom_covered = self.store.committed_batches()
+        self._bloom_age += 1
+        probed = with_might_contain(candidates, self._bloom, self.spark)
+        fresh = probed.where(~F.col("might_be_seen")).drop("might_be_seen")
+        maybe = probed.where(F.col("might_be_seen")).drop("might_be_seen")
+        # "definitely new" per the filter can still collide with
+        # hashes discovered AFTER the filter's covered snapshot —
+        # anti-join only that partition-pruned slice of the log
+        if self.store.committed_batches() != self._bloom_covered:
+            recent = disc.where(
+                ~FrontierStore.membership_filter(self._bloom_covered)
+            ).select("url_hash")
+            fresh = fresh.join(recent, "url_hash", "left_anti")
+        return fresh.unionByName(maybe.join(seen, "url_hash", "left_anti"))
+
+    # ------------------------------------------------------------------
+
     def run(self, max_batches: int | None = None) -> int:
         """Crawl until the frontier drains (T3). Returns #batches run."""
         self._bootstrap()
@@ -579,10 +537,10 @@ class CrawlEngine:
     def expire_urls(self, urls: list[str]) -> int:
         """Recrawl/TTL expiry: make completed URLs PENDING again.
 
-        Appends to the expired log (append-only revocation — the
-        state-machine twin of the cuckoo filter's delete) and
-        commits a marker batch.  The next run() re-fetches them in
-        seq order.  Returns the number of URLs expired.
+        Appends to the expired log (append-only revocation; the URLs
+        stay in the seen set) and commits a marker batch.  The next
+        run() re-fetches them in seq order.  Returns the number of
+        URLs expired.
         """
         from spacetime_crawler4py_spark.functions.urlnorm import (
             py_normalize,

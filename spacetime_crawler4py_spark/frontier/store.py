@@ -364,9 +364,9 @@ class FrontierStore:
         A completion flip 'undone' without mutating the completed
         log: effective-completed = completed rows whose batch_id is
         NOT superseded by a later expiry of the same url_hash.  This
-        is the table twin of the cuckoo filter's delete — both keep
-        the state machine append-only (Iceberg-friendly) while
-        letting a URL become PENDING again.
+        keeps the state machine append-only (Iceberg-friendly) while
+        letting a URL become PENDING again; the seen set never shrinks,
+        so the bloom needs no delete.
         """
         return self._read("expired", COMPLETED_SCHEMA)
 
@@ -449,7 +449,7 @@ class FrontierStore:
         is served from the snapshot afterwards.
 
         After compaction, ``pending()`` reads O(pending + recent
-        batches) and the bloom/cuckoo seen-filter rebuild scans the
+        batches) and the bloom seen-filter rebuild scans the
         two snapshot dirs (large sequential files) instead of
         thousands of per-batch partitions.  Returns fold stats.
         """

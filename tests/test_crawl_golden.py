@@ -43,7 +43,7 @@ def test_strict_lifo_order_matches_oracle(spark, tmp_path_factory):
     pages, status, seeds = corpus_to_dicts(corpus)
     oracle = OracleCrawler(pages, status, seeds).run()
 
-    eng = _engine(spark, d / "state", spark_dir, strict_lifo=True, use_bloom=False)
+    eng = _engine(spark, d / "state", spark_dir, strict_lifo=True)
     eng.run()
     assert eng.crawl_order() == oracle.crawl_order
     assert eng.seen_set() == set(oracle.seen.keys())
@@ -139,17 +139,18 @@ def test_expire_and_recrawl(spark, corpus80, tmp_path):
     ).seen_set()                                     # seen set unchanged
 
 
-def test_compaction_mid_crawl_preserves_golden(spark, corpus80, engine80, tmp_path):
+def test_compaction_mid_crawl_preserves_golden(
+    spark, corpus80, engine80, tmp_path, monkeypatch
+):
     """Frontier-log compaction forced every 2 batches (and across a
     resume) must not change the seen set, the crawl order, or the
     bloom-delta dedup — compaction is a physical re-layout only."""
     import os
 
     corpus_dir, _ = corpus80
-    eng = _engine(
-        spark, tmp_path / "state", corpus_dir, compact_every=2,
-        bloom_refresh_batches=3,  # force rebuilds from the snapshot too
-    )
+    # force bloom rebuilds from the snapshot too
+    monkeypatch.setattr(CrawlEngine, "BLOOM_REFRESH_BATCHES", 3)
+    eng = _engine(spark, tmp_path / "state", corpus_dir, compact_every=2)
     eng.run(max_batches=3)
     assert eng.store.latest_snapshot() is not None
     # resume with a NEW engine on the compacted store, compacting on
@@ -215,10 +216,10 @@ def test_oracle_restart_rebuild_parity(spark, tmp_path_factory):
     # restarted ORACLE byte-exactly (same revalidation semantics)
     cut = n_total // 2
     r, _ = oracle_restarted(cut)
-    eng = _engine(spark, d / "state", spark_dir, strict_lifo=True, use_bloom=False)
+    eng = _engine(spark, d / "state", spark_dir, strict_lifo=True)
     eng.run(max_batches=cut)
     resumed = _engine(
-        spark, d / "state", spark_dir, strict_lifo=True, use_bloom=False,
+        spark, d / "state", spark_dir, strict_lifo=True,
         revalidate_on_resume=True,  # frontier.py:43 is_valid on rebuild
     )
     resumed.run()

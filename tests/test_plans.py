@@ -525,3 +525,64 @@ def test_winnow_explode_does_not_rederive_fingerprints(spark):
     plan = _plan(rows)
     assert plan.count("split(") <= 4, plan.count("split(")
     assert "isnotnull(fp" in plan
+
+
+def test_bloom_probe_stays_above_dedup_and_off_build_sides(
+    spark, corpus80, tmp_path
+):
+    """Regression: a deterministic bloom-probe UDF let the optimizer
+    push the fresh/maybe filters below the url_hash dedup aggregate
+    (one probe per raw link row) and copy them, by constraint
+    inference, onto the build side of the ``recent`` and ``seen``
+    anti-joins, which then probed every row of the discovered log:
+    4 probe evaluations per batch.  Pin the written shape: at most
+    one probe per union branch, above the aggregate, and none on the
+    right side of any anti-join."""
+    from spacetime_crawler4py_spark.crawl.loop import CrawlEngine
+    from spacetime_crawler4py_spark.datagen.pages import SEED_URLS
+
+    corpus_dir, _ = corpus80
+    eng = CrawlEngine(
+        spark,
+        state_dir=str(tmp_path / "state"),
+        pages_path=f"{corpus_dir}/pages.parquet",
+        status_path=f"{corpus_dir}/fetch_status.parquet",
+        seeds=SEED_URLS,
+    )
+    # a batch committed after the bloom's build: the plan then holds
+    # the ``recent`` anti-join as well as the ``seen`` one
+    eng.run(max_batches=1)
+    parsed = spark.createDataFrame(
+        [(0, ["https://www.ics.uci.edu/a", "https://www.ics.uci.edu/b"])],
+        "fetch_order int, links array<string>",
+    )
+    plan = eng._new_links(parsed)._jdf.queryExecution().optimizedPlan()
+
+    def nodes(n):
+        kids = n.children()
+        out = [n]
+        for i in range(kids.size()):
+            out += nodes(kids.apply(i))
+        return out
+
+    def probes(n):
+        return [
+            m for m in nodes(n)
+            if m.nodeName() == "ArrowEvalPython" and "probe(" in m.simpleString(100)
+        ]
+
+    [union] = [n for n in nodes(plan) if n.nodeName() == "Union"]
+    branches = [union.children().apply(i) for i in range(union.children().size())]
+    assert len(branches) == 2
+    assert all(len(probes(b)) <= 1 for b in branches)
+    for p in probes(plan):
+        assert any(m.nodeName() == "Aggregate" for m in nodes(p))
+    for agg in (n for n in nodes(plan) if n.nodeName() == "Aggregate"):
+        assert not probes(agg)
+    anti = [
+        n for n in nodes(plan)
+        if n.nodeName() == "Join" and "LeftAnti" in n.simpleString(100)
+    ]
+    assert len(anti) == 2
+    for j in anti:
+        assert not probes(j.children().apply(1))

@@ -1,5 +1,6 @@
 """Property-based tests (SURVEY §5): normalizer idempotence, hash
-stability, bloom no-false-negatives, tokenizer invariants.
+stability, bloom no-false-negatives and false-positive rate, tokenizer
+invariants.
 
 Pure-Python oracles + the numpy bloom — no SparkSession needed, so
 these run in milliseconds and catch edge cases the fixture corpus
@@ -73,6 +74,21 @@ def test_bloom_no_false_negatives(keys):
     bf = BloomFilter.sized_for(len(keys))
     bf.add_series(hexes)
     assert bf.contains_series(hexes).all()
+
+
+def test_bloom_false_positive_rate_near_design():
+    """A bloom sized for 20,000 keys at the 1% design fpp answers
+    "maybe seen" for at most 1.5% of 20,000 keys it never held."""
+    import hashlib
+
+    def hexes(prefix):
+        return pd.Series(
+            [hashlib.sha256(f"{prefix}{i}".encode()).hexdigest() for i in range(20_000)]
+        )
+
+    bf = BloomFilter.sized_for(20_000)
+    bf.add_series(hexes("in-"))
+    assert bf.contains_series(hexes("out-")).mean() <= 0.015
 
 
 @given(st.text(max_size=300))

@@ -54,8 +54,12 @@ def main() -> None:
     audit(
         "frontier dedup anti-join (J1/F8)",
         "Wants: LeftAnti BroadcastHashJoin when the seen side is "
-        "small; the bloom prefilter (not visible here) cuts the "
-        "probe side before this join in the crawl loop.",
+        "small.  In the crawl loop the bloom probe (not visible "
+        "here) runs over the deduplicated candidates, above the "
+        "url_hash aggregate, on the probe side only: it is "
+        "nondeterministic, so Catalyst neither pushes it below the "
+        "aggregate nor infers it onto the seen side "
+        "(tests/test_plans.py).",
         QUERIES["j1_customers_without_orders"](spark, sf_dir),
     )
     from spacetime_crawler4py_spark.functions.urlnorm import col_normalize, col_urlhash
