@@ -4,7 +4,7 @@ The reference's while-loop (crawler/worker.py:20-34: pop → fetch →
 scrape → enqueue → mark-done) becomes an iterative batch dataflow:
 
     repeat:
-      batch   = politeness_schedule(PENDING)          # scheduler.py
+      batch   = politeness_schedule(PENDING)          # checkpointed
       fetched = broadcast(batch) ⋈ page_store          # J2 fetch join
       gated   = JVM filters: status/null/length        # F5-F7, pre-UDF
       parsed  = parse_pages(gated)                     # ONE Arrow UDF pass
@@ -14,13 +14,16 @@ scrape → enqueue → mark-done) becomes an iterative batch dataflow:
       commit: append discovered+completed+crawled+metrics,
               then the batch marker (atomic)           # T4 checkpoint
 
-Plan-shape invariants (checked in tests via .explain):
+Plan-shape invariants (checked in tests via the plans):
 - the batch side of the fetch join is broadcast (batch ≪ pages);
 - status/length gates run BEFORE parse_pages (UDFs are planning
   barriers — a filter written after mapInPandas would not be
   hoisted above it, so the composition order here is load-bearing);
 - the only Python crossings per iteration are parse_pages and the
-  bloom probe (batched mode only) over the deduplicated links.
+  bloom probe (batched mode only), each run ONCE per batch: the
+  batch is checkpointed, so no frame parse reads scans a log the
+  batch appends to, and the probe over the deduplicated links is
+  checkpointed before the fresh/maybe branches read it.
 
 Ordering contract: ``strict_lifo=True`` schedules one URL per batch
 (max seq first) — byte-for-byte the reference's single-threaded
@@ -174,25 +177,19 @@ class CrawlEngine:
         """Seed the frontier (crawler/frontier.py:28-36) if empty."""
         if self.store.last_batch_id() >= 0:
             return
-        rows = []
-        from spacetime_crawler4py_spark.functions.urlnorm import (
-            py_normalize,
-            py_urlhash,
-        )
-        import datetime as dt
+        import pyarrow as pa
 
-        seen = set()
-        seq = 0
-        for u in self.seeds:
-            nu = py_normalize(u)
-            h = py_urlhash(nu)
-            if h in seen:
-                continue
-            seen.add(h)
-            rows.append((h, nu, None, seq, 0, dt.datetime.now(), -0, None))
-            seq += 1
+        from spacetime_crawler4py_spark.functions.urlnorm import py_normalize, py_urlhash
+
+        # first occurrence of each url_hash, in seed order
+        seeds: dict[str, str] = {}
+        for u in map(py_normalize, self.seeds):
+            seeds.setdefault(py_urlhash(u), u)
+        n = len(seeds)
+        # through Arrow: createDataFrame(list) would start a Python job
         df = self.spark.createDataFrame(
-            [(r[0], r[1], r[3], r[4]) for r in rows],
+            pa.table({"url_hash": list(seeds), "url": list(seeds.values()),
+                      "seq": list(range(n)), "depth": [0] * n}),
             "url_hash string, url string, seq long, depth int",
         ).select(
             "url_hash",
@@ -204,7 +201,7 @@ class CrawlEngine:
             F.lit(0).cast("long").alias("batch_id"),
         )
         self.store.append_discovered(df)
-        self.store.commit(0, {"kind": "bootstrap", "n_seeds": len(rows)})
+        self.store.commit(0, {"kind": "bootstrap", "n_seeds": n})
 
     # ------------------------------------------------------------------
 
@@ -233,6 +230,8 @@ class CrawlEngine:
             from spacetime_crawler4py_spark.frontier.robots import filter_allowed
 
             pending = filter_allowed(pending, self.robots)
+        if self._max_seq is None:
+            self._max_seq = self.store.max_seq()
         if self.strict:
             sched = (
                 pending.orderBy(F.desc("seq"))
@@ -240,8 +239,6 @@ class CrawlEngine:
                 .withColumn("fetch_order", F.lit(0))
             )
         else:
-            if self._max_seq is None:
-                self._max_seq = self.store.max_seq()
             if self._n_completed is None:
                 self._n_completed = self.store.completed().count()
             sched = next_batch(
@@ -252,14 +249,17 @@ class CrawlEngine:
                 order=self.order,
                 approx_rows=max(self._max_seq + 1 - self._n_completed, 0),
             )
+        # Checkpointed, not cached: the crawl-order append below would
+        # make Spark drop and re-plan a cache that scans that log, and
+        # ``parsed`` with it — re-running schedule, fetch and parse.
         batch = sched.select(
             "url_hash", "url", "host", "seq", "depth", "fetch_order"
-        ).cache()
-        # ONE action materializes the batch cache AND hands the driver
-        # the per-host schedule counts — bounded by #hosts in the
-        # batch, never by #URLs.  The schedule itself (unbounded in
-        # host count at 10^7-host scale) stays distributed: crawl
-        # order + completion flips are Spark writes from this cache.
+        ).localCheckpoint(eager=False)
+        # ONE action materializes the batch AND hands the driver the
+        # per-host schedule counts — bounded by #hosts in the batch,
+        # never by #URLs.  The schedule itself (unbounded in host count
+        # at 10^7-host scale) stays distributed: crawl order +
+        # completion flips are Spark writes from this frame.
         sched_by_host = {
             (r["host"] or ""): r["n"]
             for r in batch.groupBy("host").agg(F.count("*").alias("n")).collect()
@@ -267,12 +267,11 @@ class CrawlEngine:
         t_sched = time.time()
         n_batch = sum(sched_by_host.values())
         # the scheduler's fetch_order intermediate has served its
-        # purpose once the batch is cached + materialized
+        # purpose once the batch is materialized
         _sched_interm = getattr(sched, "_sg_cleanup", None)
         if _sched_interm is not None:
             _sched_interm.unpersist()
         if n_batch == 0:
-            batch.unpersist()
             return {"n_batch": 0}
 
         # ---- fetch join (J2): broadcast the small batch side
@@ -325,7 +324,7 @@ class CrawlEngine:
         # ---- crawl-order log (golden: Logs/Worker.log "Downloaded"
         # lines) + completion flips (T5: idempotent — completed()
         # projects (url_hash, batch_id) from this same log): ONE
-        # distributed write from the cached batch.  The schedule
+        # distributed write from the checkpointed batch.  The schedule
         # never rides through the driver — at 10^7 hosts × politeness
         # cap this is the write that the round-1/2 driver append
         # could not survive.
@@ -338,14 +337,13 @@ class CrawlEngine:
             )
         )
 
-        new = self._new_links(parsed)
-
         # ---- n_new + per-host lineage FIRST, from ONE host-level
         # aggregation — bounded by #hosts in the batch, NOT by #new
         # URLs; the per-URL delta itself never reaches the driver.
         # Knowing the exact n_new lets the seq assigner below pick
-        # its adaptive path.
-        new = new.cache()
+        # its adaptive path.  Checkpointed, like ``batch``: ``new``
+        # scans the discovered log that the batch appends to.
+        new = self._new_links(parsed).localCheckpoint(eager=False)
         new_by_host = {
             (r["host"] or ""): r["n"]
             for r in new.groupBy(col_netloc(F.col("url")).alias("host"))
@@ -359,8 +357,6 @@ class CrawlEngine:
         # rank when the delta is wide, one-task window when n_new is
         # known-small (the range-sampling + size-pass fixed costs
         # dominate tiny batches).
-        if self._max_seq is None:
-            self._max_seq = self.store.max_seq()
         base = self._max_seq
         if n_new:
             indexed, _seq_interm = with_contiguous_index(
@@ -379,7 +375,6 @@ class CrawlEngine:
             self._max_seq = base + n_new
             self.store.append_discovered(new_rows)
             _seq_interm.unpersist()
-        new.unpersist()
 
         # completions were written with the crawl-order log above;
         # only the driver-side count cache needs the increment
@@ -428,7 +423,6 @@ class CrawlEngine:
 
         self.store.commit(batch_id, meta)
         parsed.unpersist()
-        batch.unpersist()
         return meta
 
 
@@ -500,7 +494,9 @@ class CrawlEngine:
             # anti-join until the next rebuild
             self._bloom_covered = self.store.committed_batches()
         self._bloom_age += 1
-        probed = with_might_contain(candidates, self._bloom, self.spark)
+        # probe ONCE into a materialized frame: both branches read it
+        # instead of each re-running explode → … → aggregate → probe
+        probed = with_might_contain(candidates, self._bloom, self.spark).localCheckpoint()
         fresh = probed.where(~F.col("might_be_seen")).drop("might_be_seen")
         maybe = probed.where(F.col("might_be_seen")).drop("might_be_seen")
         # "definitely new" per the filter can still collide with

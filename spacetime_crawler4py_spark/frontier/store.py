@@ -40,9 +40,11 @@ import os
 import re
 import shutil
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -220,16 +222,21 @@ class FrontierStore:
         ) as f:
             return json.load(f)
 
+    def _empty(self, schema: StructType) -> DataFrame:
+        """A row-less frame of ``schema``, built through Arrow (an empty
+        ``createDataFrame(list)`` still starts a plain-Python job)."""
+        return self.spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+
     def _snapshot_df(self, snap: dict, which: str, schema: StructType) -> DataFrame:
         path = os.path.join(self.dir, "snapshot", f"snap={snap['sid']}", which)
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], schema)
+            return self._empty(schema)
         return self.spark.read.schema(schema).parquet(path)
 
     def _read(self, name: str, schema: StructType) -> DataFrame:
         path = os.path.join(self.dir, name)
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], schema)
+            return self._empty(schema)
         df = self.spark.read.schema(schema).parquet(path)
         # uncommitted batch data (crash between write and marker)
         # must be invisible: filter to committed-set MEMBERSHIP.
@@ -339,11 +346,8 @@ class FrontierStore:
                 )
             )
         if not parts:
-            return self.spark.createDataFrame([], COMPLETED_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            return self._empty(COMPLETED_SCHEMA)
+        return reduce(DataFrame.unionByName, parts)
 
     def completed(self) -> DataFrame:
         """Completion flips: the snapshot's folded pseudo-completions

@@ -101,6 +101,46 @@ def test_fifo_per_host_converges_to_same_seen_set(spark, corpus80, oracle80, tmp
     assert eng.crawl_order()[0] == "https://www.ics.uci.edu"
 
 
+def test_bootstrap_rows(spark, corpus80, tmp_path):
+    """The seed frame is built through Arrow; its discovered rows are
+    the first occurrence of each url_hash, in seed order: a trailing
+    slash and the scheme are not part of the hash."""
+    from spacetime_crawler4py_spark.functions.urlnorm import py_urlhash
+
+    corpus_dir, _ = corpus80
+    seeds = SEED_URLS + [
+        "https://www.cs.uci.edu/",
+        "http://www.ics.uci.edu",
+        "https://WWW.STAT.UCI.EDU/x#f",
+    ]
+    eng = CrawlEngine(
+        spark,
+        state_dir=str(tmp_path / "state"),
+        pages_path=f"{corpus_dir}/pages.parquet",
+        status_path=None,
+        seeds=seeds,
+    )
+    eng._bootstrap()
+    got = [
+        tuple(r)
+        for r in eng.store.discovered()
+        .orderBy("seq")
+        .select("url_hash", "url", "host", "seq", "depth", "host_bucket", "batch_id")
+        .collect()
+    ]
+    expected = [
+        ("https://www.ics.uci.edu", "www.ics.uci.edu", 52),
+        ("https://www.cs.uci.edu", "www.cs.uci.edu", 54),
+        ("https://www.informatics.uci.edu", "www.informatics.uci.edu", 24),
+        ("https://www.stat.uci.edu", "www.stat.uci.edu", 22),
+        ("https://WWW.STAT.UCI.EDU/x#f", "WWW.STAT.UCI.EDU", 2),
+    ]
+    assert got == [
+        (py_urlhash(url), url, host, seq, 0, bucket, 0)
+        for seq, (url, host, bucket) in enumerate(expected)
+    ]
+
+
 def test_lineage_table(spark, corpus80, tmp_path):
     """Per-host lineage rows accompany every committed batch."""
     import os

@@ -10,7 +10,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from spacetime_crawler4py_spark.frontier.store import STREAM_NS, FrontierStore
+from spacetime_crawler4py_spark.frontier.store import (
+    COMPLETED_SCHEMA,
+    DISCOVERED_SCHEMA,
+    STREAM_NS,
+    FrontierStore,
+)
 
 
 def _rows(spark, batch_id: int, n: int):
@@ -29,6 +34,22 @@ def _rows(spark, batch_id: int, n: int):
         F.current_timestamp().alias("discovered_ts"),
         F.lit(batch_id).cast("long").alias("batch_id"),
     )
+
+
+def test_fresh_store_frames_are_arrow_built_with_exact_schemas(spark, tmp_path):
+    """On a fresh store the logs are row-less frames built through
+    Arrow (a local relation, no Python RDD) with the declared schemas:
+    types, the session-local timestamp and nullability."""
+    store = FrontierStore(spark, str(tmp_path / "state"))
+    for df, schema in (
+        (store.discovered(), DISCOVERED_SCHEMA),
+        (store.completed(), COMPLETED_SCHEMA),
+        (store.pending(), DISCOVERED_SCHEMA),
+    ):
+        assert df.schema == schema
+        assert df.count() == 0
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
 
 
 def test_streaming_commit_does_not_expose_uncommitted_crawl_data(spark, tmp_path):

@@ -527,62 +527,110 @@ def test_winnow_explode_does_not_rederive_fingerprints(spark):
     assert "isnotnull(fp" in plan
 
 
+def _nodes(n):
+    """``n`` and every node below it, in a JVM logical plan."""
+    kids = n.children()
+    out = [n]
+    for i in range(kids.size()):
+        out += _nodes(kids.apply(i))
+    return out
+
+
+def _crawl_engine(spark, corpus80, state_dir):
+    from spacetime_crawler4py_spark.crawl.loop import CrawlEngine
+    from spacetime_crawler4py_spark.datagen.pages import SEED_URLS
+
+    corpus_dir, _ = corpus80
+    return CrawlEngine(
+        spark,
+        state_dir=str(state_dir),
+        pages_path=f"{corpus_dir}/pages.parquet",
+        status_path=f"{corpus_dir}/fetch_status.parquet",
+        seeds=SEED_URLS,
+    )
+
+
 def test_bloom_probe_stays_above_dedup_and_off_build_sides(
-    spark, corpus80, tmp_path
+    spark, corpus80, tmp_path, monkeypatch
 ):
     """Regression: a deterministic bloom-probe UDF let the optimizer
     push the fresh/maybe filters below the url_hash dedup aggregate
     (one probe per raw link row) and copy them, by constraint
     inference, onto the build side of the ``recent`` and ``seen``
     anti-joins, which then probed every row of the discovered log:
-    4 probe evaluations per batch.  Pin the written shape: at most
-    one probe per union branch, above the aggregate, and none on the
-    right side of any anti-join."""
-    from spacetime_crawler4py_spark.crawl.loop import CrawlEngine
-    from spacetime_crawler4py_spark.datagen.pages import SEED_URLS
+    4 probe evaluations per batch.  Then each union branch still
+    re-ran explode → validity → normalize → sha2 → aggregate → probe:
+    2 per batch.  Pin the probe-once shape: one probe per batch, over
+    the deduplicated candidates (above the url_hash aggregate), into a
+    materialized frame that both branches read, so the frame
+    ``_new_links`` returns evaluates no probe, on an anti-join's build
+    side or anywhere else."""
+    from spacetime_crawler4py_spark.crawl import loop
 
-    corpus_dir, _ = corpus80
-    eng = CrawlEngine(
-        spark,
-        state_dir=str(tmp_path / "state"),
-        pages_path=f"{corpus_dir}/pages.parquet",
-        status_path=f"{corpus_dir}/fetch_status.parquet",
-        seeds=SEED_URLS,
-    )
+    eng = _crawl_engine(spark, corpus80, tmp_path / "state")
     # a batch committed after the bloom's build: the plan then holds
     # the ``recent`` anti-join as well as the ``seen`` one
     eng.run(max_batches=1)
+    probed = []
+
+    def spy(*args, **kwargs):
+        probed.append(real(*args, **kwargs))
+        return probed[-1]
+
+    real = loop.with_might_contain
+    monkeypatch.setattr(loop, "with_might_contain", spy)
     parsed = spark.createDataFrame(
         [(0, ["https://www.ics.uci.edu/a", "https://www.ics.uci.edu/b"])],
         "fetch_order int, links array<string>",
     )
     plan = eng._new_links(parsed)._jdf.queryExecution().optimizedPlan()
 
-    def nodes(n):
-        kids = n.children()
-        out = [n]
-        for i in range(kids.size()):
-            out += nodes(kids.apply(i))
-        return out
-
     def probes(n):
         return [
-            m for m in nodes(n)
+            m for m in _nodes(n)
             if m.nodeName() == "ArrowEvalPython" and "probe(" in m.simpleString(100)
         ]
 
-    [union] = [n for n in nodes(plan) if n.nodeName() == "Union"]
-    branches = [union.children().apply(i) for i in range(union.children().size())]
-    assert len(branches) == 2
-    assert all(len(probes(b)) <= 1 for b in branches)
-    for p in probes(plan):
-        assert any(m.nodeName() == "Aggregate" for m in nodes(p))
-    for agg in (n for n in nodes(plan) if n.nodeName() == "Aggregate"):
-        assert not probes(agg)
+    assert len(probed) == 1
+    [p] = probes(probed[0]._jdf.queryExecution().optimizedPlan())
+    aggs = [m for m in _nodes(p) if m.nodeName() == "Aggregate"]
+    assert aggs and not any(probes(agg) for agg in aggs)
+    [union] = [n for n in _nodes(plan) if n.nodeName() == "Union"]
+    assert union.children().size() == 2
     anti = [
-        n for n in nodes(plan)
+        n for n in _nodes(plan)
         if n.nodeName() == "Join" and "LeftAnti" in n.simpleString(100)
     ]
     assert len(anti) == 2
-    for j in anti:
-        assert not probes(j.children().apply(1))
+    assert not probes(plan)
+
+
+def test_parse_input_reads_no_frontier_log(spark, corpus80, tmp_path, monkeypatch):
+    """Regression: the batch was cached over ``pending()``, which scans
+    the crawl-order log.  The batch's own crawl-order append made Spark
+    drop and re-plan that cache and the ``parsed`` cache on it, so
+    every batch after the first ran its schedule, fetch join and parse
+    UDF twice.  The frame handed to ``parse_pages`` must read no file
+    of the frontier store."""
+    from spacetime_crawler4py_spark.crawl import loop
+
+    state = tmp_path / "state"
+    inputs = []
+
+    def spy(df):
+        inputs.append(df)
+        return real(df)
+
+    real = loop.parse_pages
+    monkeypatch.setattr(loop, "parse_pages", spy)
+    eng = _crawl_engine(spark, corpus80, state)
+    assert eng.run() >= 2
+    assert len(inputs) >= 2
+    for df in inputs:
+        read = [
+            str(path)
+            for n in _nodes(df._jdf.queryExecution().analyzed())
+            if n.nodeName() == "LogicalRelation"
+            for path in n.relation().location().rootPaths().mkString("\n").split("\n")
+        ]
+        assert read and not [p for p in read if str(state) in p], read

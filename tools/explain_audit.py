@@ -55,10 +55,11 @@ def main() -> None:
         "frontier dedup anti-join (J1/F8)",
         "Wants: LeftAnti BroadcastHashJoin when the seen side is "
         "small.  In the crawl loop the bloom probe (not visible "
-        "here) runs over the deduplicated candidates, above the "
-        "url_hash aggregate, on the probe side only: it is "
-        "nondeterministic, so Catalyst neither pushes it below the "
-        "aggregate nor infers it onto the seen side "
+        "here) runs once per batch over the deduplicated candidates, "
+        "above the url_hash aggregate, into a local checkpoint that "
+        "both fresh/maybe branches read: it is nondeterministic, so "
+        "Catalyst neither pushes it below the aggregate nor infers it "
+        "onto the seen side, and no anti-join re-evaluates it "
         "(tests/test_plans.py).",
         QUERIES["j1_customers_without_orders"](spark, sf_dir),
     )
